@@ -1913,20 +1913,13 @@ object Queries {
         .repartition(8)
         .foreachPartition { (it: Iterator[(Long, String, Double)]) =>
           val rows = it.toArray
-          if (rows.nonEmpty) {
-            val js = new org.apache.avro.Schema.Parser().parse(writerJson)
-            val w = new org.apache.avro.file.DataFileWriter(
-              new org.apache.avro.generic.GenericDatumWriter[
-                org.apache.avro.generic.GenericRecord](js))
-            w.create(js, new java.io.File(path,
-              f"part-${org.apache.spark.TaskContext.getPartitionId()}%05d.avro"))
-            rows.foreach { case (id, t, v) =>
-              val r = new org.apache.avro.generic.GenericData.Record(js)
-              r.put("event_id", id); r.put("event_type", t); r.put("value", v)
-              w.append(r)
-            }
-            w.close()
-          }
+          if (rows.nonEmpty)
+            graft.sources.AvroFiles.write(new java.io.File(path,
+              f"part-${org.apache.spark.TaskContext.getPartitionId()}%05d.avro"),
+              Avro.create(writerJson), rows.iterator.map { case (id, t, v) =>
+                org.apache.spark.sql.catalyst.InternalRow(id,
+                  org.apache.spark.unsafe.types.UTF8String.fromString(t), v)
+              })
         }
       path
     })

@@ -1,29 +1,23 @@
 package graft.functions
 
-import graft.schema.{Avro, AvroSchema, AvroSchemaError, AvroType, EnumType,
-  FixedType, PrimitiveType, RecordType, UnionType, SchemaConverters}
-import org.apache.avro.{Schema => JSchema}
-import org.apache.avro.generic.{GenericData, GenericDatumReader,
-  GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import graft.schema.{Avro, AvroSchema, SchemaConverters}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData,
-  GenericArrayData}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-import java.io.ByteArrayOutputStream
-import java.nio.ByteBuffer
-import scala.jdk.CollectionConverters._
 
 /** Binary Avro encode/decode with reader-schema evolution — the engine's
-  * analog of the reference's `flatten_msgpack`/`unflatten_msgpack` no-boxing
-  * fast path (reference: README.md:250–255; linker init.lua:462–470).
-  * Implemented directly on Apache Avro Java (ships with Spark) as Catalyst
-  * expressions over the object-form representation.
+  * analog of the reference's `flatten_msgpack`/`unflatten_msgpack`
+  * no-boxing fast path (reference: README.md:250–255; linker
+  * init.lua:462–470).
+  *
+  * Both directions are Catalyst expressions over the object-form
+  * representation ([[SchemaConverters]]), each one call into a codec
+  * compiled once per schema ([[AvroCodec]]). They generate code, so the
+  * projections and filters around them stay inside whole-stage codegen;
+  * the per-row cost is the codec's own byte work, with no avro-java
+  * generic values in between.
   */
 object AvroBinary {
 
@@ -33,275 +27,61 @@ object AvroBinary {
       schema.exportString))
 
   /** Decode Avro binary with evolution: written with `writer`, read as
-    * `reader` (avro ResolvingDecoder applies promotions/defaults/aliases).
+    * `reader` (promotions, defaults, aliases and enum/union remaps as
+    * [[graft.schema.Compat]] maps them).
     */
   def fromAvroBinary(c: Column, writer: AvroSchema,
-      reader: AvroSchema): Column =
-    graftshim.column(FromAvroBinary(graftshim.expression(c),
-      writer.exportString, reader.exportString))
+      reader: AvroSchema): Column = {
+    val e = FromAvroBinary(graftshim.expression(c), writer.exportString,
+      reader.exportString)
+    e.codec // an incompatible schema pair fails here, not in a task
+    graftshim.column(e)
+  }
 
   def fromAvroBinary(c: Column, schema: AvroSchema): Column =
     fromAvroBinary(c, schema, schema)
-
-  // -------------------------------------------------------------------
-  // catalyst value → avro generic value
-  // -------------------------------------------------------------------
-
-  def encoder(s: AvroSchema, t0: AvroType, js: JSchema): Any => AnyRef = {
-    val t = s.resolve(t0)
-    val inner = unwrapNullable(js)
-    t match {
-      case PrimitiveType("null", _) => _ => null
-      case PrimitiveType("boolean" | "int" | "long" | "float" | "double", n) =>
-        v => v.asInstanceOf[AnyRef]
-      case PrimitiveType("string", _) =>
-        v => if (v == null) null else v.toString
-      case PrimitiveType("bytes", _) =>
-        v => if (v == null) null
-          else ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
-      case e: EnumType =>
-        v => if (v == null) null
-          else new GenericData.EnumSymbol(inner, v.toString)
-      case f: FixedType =>
-        v => if (v == null) null
-          else new GenericData.Fixed(inner, v.asInstanceOf[Array[Byte]])
-      case a: graft.schema.ArrayType =>
-        val et = s.resolve(a.items)
-        val edt = SchemaConverters.toSparkType(s, et)
-        val enc = encoder(s, et, inner.getElementType)
-        v => if (v == null) null else {
-          val ad = v.asInstanceOf[ArrayData]
-          val out = new java.util.ArrayList[AnyRef](ad.numElements())
-          ad.foreach(edt, (_, x) => { out.add(enc(x)); () })
-          out
-        }
-      case m: graft.schema.MapType =>
-        val vt = s.resolve(m.values)
-        val vdt = SchemaConverters.toSparkType(s, vt)
-        val enc = encoder(s, vt, inner.getValueType)
-        v => if (v == null) null else {
-          val md = v.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
-          val out = new java.util.LinkedHashMap[String, AnyRef]()
-          val keys = md.keyArray()
-          val vals = md.valueArray()
-          var i = 0
-          while (i < md.numElements()) {
-            out.put(keys.getUTF8String(i).toString, enc(vals.get(i, vdt)))
-            i += 1
-          }
-          out
-        }
-      case r: RecordType =>
-        val fieldEncs = r.fields.zipWithIndex.map { case (f, i) =>
-          val ft = s.resolve(f.tpe)
-          val fdt = SchemaConverters.toSparkType(s, ft)
-          val fjs = inner.getFields.get(i).schema()
-          (i, fdt, encoder(s, ft, fjs))
-        }
-        v => if (v == null) null else {
-          val row = v.asInstanceOf[InternalRow]
-          val rec = new GenericData.Record(inner)
-          fieldEncs.foreach { case (i, fdt, enc) =>
-            rec.put(i, if (row.isNullAt(i)) null else enc(row.get(i, fdt)))
-          }
-          rec
-        }
-      case u: UnionType if u.isNullableScalar =>
-        val b = u.branches.find(_.typeName != "null").get
-        val bjs = js.getTypes.asScala.find(_.getType != JSchema.Type.NULL).get
-        val enc = encoder(s, b, bjs)
-        v => if (v == null) null else enc(v)
-      case u: UnionType =>
-        // struct-form union: field 0 = $type$, then non-null branch fields
-        val branches = u.branches.map(s.resolve)
-        val nonNullIdx = branches.zipWithIndex
-          .filter(_._1.typeName != "null").map(_._2)
-        val fieldOfBranch: Map[Int, Int] =
-          nonNullIdx.zipWithIndex.map { case (b, k) => b -> (k + 1) }.toMap
-        val encs: Map[Int, (DataType, Any => AnyRef)] =
-          nonNullIdx.map { bi =>
-            val bt = branches(bi)
-            bi -> ((SchemaConverters.toSparkType(s, bt),
-              encoder(s, bt, js.getTypes.get(bi))))
-          }.toMap
-        v => if (v == null) null else {
-          val row = v.asInstanceOf[InternalRow]
-          val tag = row.getInt(0)
-          if (branches(tag).typeName == "null") null
-          else {
-            val (dt, enc) = encs(tag)
-            val pos = fieldOfBranch(tag)
-            if (row.isNullAt(pos)) null else enc(row.get(pos, dt))
-          }
-        }
-      case other => throw new AvroSchemaError(
-        s"Type ${other.displayName} unsupported in binary path")
-    }
-  }
-
-  private def unwrapNullable(js: JSchema): JSchema =
-    if (js.getType == JSchema.Type.UNION && js.getTypes.size == 2 &&
-        js.getTypes.get(0).getType == JSchema.Type.NULL)
-      js.getTypes.get(1)
-    else js
-
-  // -------------------------------------------------------------------
-  // avro generic value → catalyst value
-  // -------------------------------------------------------------------
-
-  def decoder(s: AvroSchema, t0: AvroType, js: JSchema): AnyRef => Any = {
-    val t = s.resolve(t0)
-    val inner = unwrapNullable(js)
-    t match {
-      case PrimitiveType("null", _) => _ => null
-      case PrimitiveType("boolean" | "int" | "long" | "float" | "double", _) =>
-        v => v
-      case PrimitiveType("string", _) =>
-        v => if (v == null) null else UTF8String.fromString(v.toString)
-      case PrimitiveType("bytes", _) =>
-        v => if (v == null) null else byteArray(v)
-      case _: EnumType =>
-        v => if (v == null) null else UTF8String.fromString(v.toString)
-      case _: FixedType =>
-        // clone: with datum reuse avro refills the same Fixed in place
-        v => if (v == null) null
-          else v.asInstanceOf[GenericData.Fixed].bytes().clone()
-      case a: graft.schema.ArrayType =>
-        val dec = decoder(s, a.items, inner.getElementType)
-        v => if (v == null) null else {
-          val xs = v.asInstanceOf[java.util.List[AnyRef]]
-          new GenericArrayData(xs.asScala.map(dec).toArray)
-        }
-      case m: graft.schema.MapType =>
-        val dec = decoder(s, m.values, inner.getValueType)
-        v => if (v == null) null else {
-          val jm = v.asInstanceOf[java.util.Map[AnyRef, AnyRef]]
-          val keys = new Array[Any](jm.size)
-          val vals = new Array[Any](jm.size)
-          var i = 0
-          jm.forEach { (k, value) =>
-            keys(i) = UTF8String.fromString(k.toString)
-            vals(i) = dec(value)
-            i += 1
-          }
-          ArrayBasedMapData(keys, vals)
-        }
-      case r: RecordType =>
-        val decs = r.fields.zipWithIndex.map { case (f, i) =>
-          (i, decoder(s, f.tpe, inner.getFields.get(i).schema()))
-        }
-        v => if (v == null) null else {
-          val rec = v.asInstanceOf[GenericRecord]
-          val out = new Array[Any](decs.length)
-          decs.foreach { case (i, dec) => out(i) = dec(rec.get(i)) }
-          InternalRow.fromSeq(out.toIndexedSeq)
-        }
-      case u: UnionType if u.isNullableScalar =>
-        val b = u.branches.find(_.typeName != "null").get
-        val bjs = js.getTypes.asScala.find(_.getType != JSchema.Type.NULL)
-          .getOrElse(js)
-        val dec = decoder(s, b, bjs)
-        v => if (v == null) null else dec(v)
-      case u: UnionType =>
-        val branches = u.branches.map(s.resolve)
-        val nonNullIdx = branches.zipWithIndex
-          .filter(_._1.typeName != "null").map(_._2)
-        val fieldOfBranch: Map[Int, Int] =
-          nonNullIdx.zipWithIndex.map { case (b, k) => b -> (k + 1) }.toMap
-        val decs: Map[Int, AnyRef => Any] = nonNullIdx.map { bi =>
-          bi -> decoder(s, branches(bi), js.getTypes.get(bi))
-        }.toMap
-        val gd = GenericData.get()
-        v => {
-          val tag = gd.resolveUnion(js, v)
-          val out = new Array[Any](1 + nonNullIdx.length)
-          out(0) = tag
-          if (v != null && branches(tag).typeName != "null")
-            out(fieldOfBranch(tag)) = decs(tag)(v.asInstanceOf[AnyRef])
-          InternalRow.fromSeq(out.toIndexedSeq)
-        }
-      case other => throw new AvroSchemaError(
-        s"Type ${other.displayName} unsupported in binary path")
-    }
-  }
-
-  private def byteArray(v: AnyRef): Array[Byte] = v match {
-    case bb: ByteBuffer =>
-      val arr = new Array[Byte](bb.remaining())
-      bb.duplicate().get(arr)
-      arr
-    case a: Array[Byte] => a
-    case other => other.toString.getBytes("UTF-8")
-  }
 }
 
-/** Encode object-form values to Avro binary. Non-codegen (CodegenFallback):
-  * the per-row cost is dominated by Avro serialization itself.
+/** Encode object-form values to Avro binary. The input must have the
+  * schema's object-form type (field names aside).
   */
 case class ToAvroBinary(child: Expression, schemaJson: String)
-    extends UnaryExpression with CodegenFallback {
+    extends CodecExpression {
   override def dataType: DataType = BinaryType
   override def nullable: Boolean = child.nullable
 
-  @transient private lazy val graftSchema = Avro.create(schemaJson)
-  @transient private lazy val javaSchema = AvroJavaSchema.toJava(graftSchema)
-  @transient private lazy val enc =
-    AvroBinary.encoder(graftSchema, graftSchema.root, javaSchema)
-  @transient private lazy val writer =
-    new GenericDatumWriter[AnyRef](javaSchema)
-  // per-thread reused stream + encoder: binaryEncoder() allocates a 2KiB
-  // buffer per call otherwise, which dominates the per-row cost
-  @transient private lazy val tl = ThreadLocal.withInitial[
-      (ByteArrayOutputStream, org.apache.avro.io.BinaryEncoder)](() => {
-    val out = new ByteArrayOutputStream(256)
-    (out, EncoderFactory.get().directBinaryEncoder(out, null))
-  })
-
-  override def nullSafeEval(input: Any): Any = {
-    val (out, reuse) = tl.get()
-    out.reset()
-    val e = EncoderFactory.get().directBinaryEncoder(out, reuse)
-    writer.write(enc(input), e)
-    e.flush()
-    out.toByteArray
+  @transient private lazy val expected = {
+    val s = Avro.create(schemaJson)
+    SchemaConverters.toSparkType(s, s.root)
   }
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (DataType.equalsStructurally(child.dataType, expected,
+        ignoreNullability = true)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"toAvroBinary needs ${expected.simpleString}, " +
+        s"got ${child.dataType.simpleString}")
+
+  @transient lazy val codec: Codec = AvroCodec.encoder(schemaJson)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** Decode Avro binary with reader-schema evolution (promotions, defaults,
-  * alias renames are applied by avro's resolving reader).
+/** Decode Avro binary written with `writerJson` into the object form of
+  * `readerJson`.
   */
 case class FromAvroBinary(child: Expression, writerJson: String,
-    readerJson: String) extends UnaryExpression with CodegenFallback {
+    readerJson: String) extends CodecExpression {
 
-  @transient private lazy val writerSchema = Avro.create(writerJson)
-  @transient private lazy val readerSchema = Avro.create(readerJson)
-  @transient private lazy val jWriter = AvroJavaSchema.toJava(writerSchema)
-  @transient private lazy val jReader = AvroJavaSchema.toJava(readerSchema)
-  @transient private lazy val datumReader =
-    new GenericDatumReader[AnyRef](jWriter, jReader)
-  @transient private lazy val dec =
-    AvroBinary.decoder(readerSchema, readerSchema.root, jReader)
-
+  @transient private lazy val reader = Avro.create(readerJson)
   override lazy val dataType: DataType =
-    SchemaConverters.toSparkType(readerSchema, readerSchema.root)
-  override def nullable: Boolean = child.nullable
+    SchemaConverters.toSparkType(reader, reader.root)
+  override lazy val nullable: Boolean =
+    child.nullable || SchemaConverters.isNullish(reader, reader.root)
 
-  @transient private lazy val tlDec = ThreadLocal.withInitial[
-      (org.apache.avro.io.BinaryDecoder, Array[AnyRef])](() =>
-    (DecoderFactory.get().binaryDecoder(Array.emptyByteArray, null),
-      new Array[AnyRef](1)))
-
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    val (reuse, datumBox) = tlDec.get()
-    val d = DecoderFactory.get().binaryDecoder(bytes, reuse)
-    // reuse the previous datum skeleton (avro refills it in place)
-    datumBox(0) = datumReader.read(datumBox(0), d).asInstanceOf[AnyRef]
-    dec(datumBox(0))
-  }
+  @transient lazy val codec: AvroDecoder =
+    AvroCodec.decoder(writerJson, readerJson)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

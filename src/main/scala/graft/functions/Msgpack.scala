@@ -1,7 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression,
+  GenericInternalRow, SpecializedGetters}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData,
+  GenericArrayData}
+import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal MessagePack codec for the reference's wire fast path.
   *
@@ -23,6 +32,11 @@ import org.apache.spark.sql.types._
   * uint read), float32/64, str, bin, array, map. Encoding always picks
   * the smallest format — byte-compatible with what msgpack-lua emits for
   * the same values.
+  *
+  * [[encodeFlat]]/[[decodeFlat]] are Catalyst expressions compiled per
+  * Spark schema ([[FlatEncoder]]/[[FlatDecoder]]): they read and write
+  * `InternalRow` directly and generate code, so the framing runs inside
+  * whole-stage codegen with no external-`Row` conversion.
   */
 object Msgpack {
 
@@ -31,6 +45,7 @@ object Msgpack {
   private final class Writer {
     private var buf = new Array[Byte](256)
     private var len = 0
+    def reset(): Unit = len = 0
     private def ensure(n: Int): Unit =
       if (len + n > buf.length) {
         buf = java.util.Arrays.copyOf(buf,
@@ -45,8 +60,35 @@ object Msgpack {
       System.arraycopy(v, 0, buf, len, v.length)
       len += v.length
     }
+    def utf8(s: UTF8String): Unit = {
+      strHeader(this, s.numBytes())
+      ensure(s.numBytes())
+      s.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + len)
+      len += s.numBytes()
+    }
     def result(): Array[Byte] = java.util.Arrays.copyOf(buf, len)
   }
+
+  private def strHeader(w: Writer, n: Int): Unit =
+    if (n <= 31) w.b(0xa0 | n)
+    else if (n <= 0xff) { w.b(0xd9); w.b(n) }
+    else if (n <= 0xffff) { w.b(0xda); w.u16(n) }
+    else { w.b(0xdb); w.u32(n) }
+
+  private def binHeader(w: Writer, n: Int): Unit =
+    if (n <= 0xff) { w.b(0xc4); w.b(n) }
+    else if (n <= 0xffff) { w.b(0xc5); w.u16(n) }
+    else { w.b(0xc6); w.u32(n) }
+
+  private def arrayHeader(w: Writer, n: Int): Unit =
+    if (n <= 15) w.b(0x90 | n)
+    else if (n <= 0xffff) { w.b(0xdc); w.u16(n) }
+    else { w.b(0xdd); w.u32(n) }
+
+  private def mapHeader(w: Writer, n: Int): Unit =
+    if (n <= 15) w.b(0x80 | n)
+    else if (n <= 0xffff) { w.b(0xde); w.u16(n) }
+    else { w.b(0xdf); w.u32(n) }
 
   private def writeValue(w: Writer, v: Any): Unit = v match {
     case null => w.b(0xc0)
@@ -60,35 +102,22 @@ object Msgpack {
       w.b(0xcb); w.u64(java.lang.Double.doubleToLongBits(d))
     case s: String =>
       val bytes = s.getBytes("UTF-8")
-      val n = bytes.length
-      if (n <= 31) w.b(0xa0 | n)
-      else if (n <= 0xff) { w.b(0xd9); w.b(n) }
-      else if (n <= 0xffff) { w.b(0xda); w.u16(n) }
-      else { w.b(0xdb); w.u32(n) }
+      strHeader(w, bytes.length)
       w.raw(bytes)
     case bin: Array[Byte] =>
-      val n = bin.length
-      if (n <= 0xff) { w.b(0xc4); w.b(n) }
-      else if (n <= 0xffff) { w.b(0xc5); w.u16(n) }
-      else { w.b(0xc6); w.u32(n) }
+      binHeader(w, bin.length)
       w.raw(bin)
     case r: Row => writeArray(w, r.toSeq)
     case seq: scala.collection.Seq[_] => writeArray(w, seq)
     case m: scala.collection.Map[_, _] =>
-      val n = m.size
-      if (n <= 15) w.b(0x80 | n)
-      else if (n <= 0xffff) { w.b(0xde); w.u16(n) }
-      else { w.b(0xdf); w.u32(n) }
+      mapHeader(w, m.size)
       m.foreach { case (k, mv) => writeValue(w, k); writeValue(w, mv) }
     case other => throw new IllegalArgumentException(
       s"msgpack: unsupported value ${other.getClass.getName}")
   }
 
   private def writeArray(w: Writer, seq: scala.collection.Seq[_]): Unit = {
-    val n = seq.length
-    if (n <= 15) w.b(0x90 | n)
-    else if (n <= 0xffff) { w.b(0xdc); w.u16(n) }
-    else { w.b(0xdd); w.u32(n) }
+    arrayHeader(w, seq.length)
     seq.foreach(writeValue(w, _))
   }
 
@@ -122,6 +151,7 @@ object Msgpack {
 
   private final class Reader(buf: Array[Byte]) {
     var pos = 0
+    def peek(): Int = buf(pos) & 0xff
     def u8(): Int = { val v = buf(pos) & 0xff; pos += 1; v }
     def i8(): Int = { val v = buf(pos).toInt; pos += 1; v }
     def u16(): Int = (u8() << 8) | u8()
@@ -133,6 +163,14 @@ object Msgpack {
       v
     }
     def str(n: Int): String = new String(raw(n), "UTF-8")
+    /** Points into the payload: Spark binary values are immutable. */
+    def utf8(n: Int): UTF8String = {
+      if (pos + n > buf.length) throw new ArrayIndexOutOfBoundsException(
+        s"msgpack: string of $n bytes at $pos overruns the payload")
+      val s = UTF8String.fromBytes(buf, pos, n)
+      pos += n
+      s
+    }
   }
 
   private def readValue(r: Reader): Any = {
@@ -184,10 +222,13 @@ object Msgpack {
   def decode(bytes: Array[Byte]): Any = {
     val r = new Reader(bytes)
     val v = readValue(r)
-    if (r.pos != bytes.length) throw new IllegalArgumentException(
-      s"msgpack: ${bytes.length - r.pos} trailing bytes")
+    checkEnd(r, bytes)
     v
   }
+
+  private def checkEnd(r: Reader, bytes: Array[Byte]): Unit =
+    if (r.pos != bytes.length) throw new IllegalArgumentException(
+      s"msgpack: ${bytes.length - r.pos} trailing bytes")
 
   // ------------------------------------------- DataFrame flat framing
 
@@ -197,65 +238,237 @@ object Msgpack {
     * layout. Output: single binary column `as`.
     */
   def encodeFlat(df: DataFrame, as: String = "msgpack"): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(
-      StructType(Seq(StructField(as, BinaryType, nullable = false))))
-    df.mapPartitions { rows =>
-      rows.map(r => Row(encode(r)))
-    }(enc)
+    val row = struct(df.columns.toIndexedSeq.map(c =>
+      col("`" + c.replace("`", "``") + "`")): _*)
+    df.select(graftshim.column(
+      EncodeFlat(graftshim.expression(row))).as(as))
   }
 
   /** `unflatten_msgpack` inverse of [[encodeFlat]]: decode the msgpack
     * arrays in `col` back into typed columns per `schema`. Field values
-    * are coerced from the decoded tree (Long → int/short/byte columns,
-    * Vector → arrays/structs) — a decode-layer concern, same as the
-    * reference resolving msgpack LONG tokens against the target type.
+    * are coerced from the wire formats (any int format → int/short/byte/
+    * long columns, arrays → arrays/structs) — a decode-layer concern, same
+    * as the reference resolving msgpack LONG tokens against the target
+    * type.
     */
   def decodeFlat(df: DataFrame, colName: String,
       schema: StructType): DataFrame = {
-    val idx = df.schema.fieldIndex(colName)
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        decode(r.getAs[Array[Byte]](idx)) match {
-          case arr: Vector[Any] @unchecked => coerceRow(arr, schema)
-          case other => throw new IllegalArgumentException(
-            s"msgpack: expected a tuple array, got $other")
-        }
-      }
-    }(enc)
+    val tuple = "__msgpack_tuple"
+    df.select(graftshim.column(DecodeFlat(
+        graftshim.expression(df.col("`" + colName.replace("`", "``") + "`")),
+        schema)).as(tuple))
+      .select(s"$tuple.*")
   }
 
-  private def coerceRow(values: Seq[Any], schema: StructType): Row = {
-    require(values.length == schema.length,
-      s"msgpack: tuple arity ${values.length} != schema ${schema.length}")
-    Row.fromSeq(values.zip(schema.fields).map { case (v, f) =>
-      coerce(v, f.dataType)
-    })
+  // ------------------------------------------ compiled flat framing
+
+  private type Put = (Writer, SpecializedGetters, Int) => Unit
+
+  /** Writer of one slot of Spark type `dt`, null-aware. */
+  private def put(dt: DataType): Put = {
+    val p: Put = dt match {
+      case NullType => (w, _, _) => w.b(0xc0)
+      case BooleanType => (w, c, i) => w.b(if (c.getBoolean(i)) 0xc3 else 0xc2)
+      case ByteType => (w, c, i) => writeLong(w, c.getByte(i))
+      case ShortType => (w, c, i) => writeLong(w, c.getShort(i))
+      case IntegerType => (w, c, i) => writeLong(w, c.getInt(i))
+      case LongType => (w, c, i) => writeLong(w, c.getLong(i))
+      case FloatType => (w, c, i) =>
+        w.b(0xca); w.u32(java.lang.Float.floatToIntBits(c.getFloat(i)))
+      case DoubleType => (w, c, i) =>
+        w.b(0xcb); w.u64(java.lang.Double.doubleToLongBits(c.getDouble(i)))
+      case StringType => (w, c, i) => w.utf8(c.getUTF8String(i))
+      case BinaryType => (w, c, i) =>
+        val b = c.getBinary(i)
+        binHeader(w, b.length)
+        w.raw(b)
+      case st: StructType =>
+        val fields = st.fields.map(f => put(f.dataType))
+        (w, c, i) => putRow(w, c.getStruct(i, fields.length), fields)
+      case ArrayType(et, _) =>
+        val item = put(et)
+        (w, c, i) =>
+          val a = c.getArray(i)
+          arrayHeader(w, a.numElements())
+          var j = 0
+          while (j < a.numElements()) { item(w, a, j); j += 1 }
+      case MapType(kt, vt, _) =>
+        val key = put(kt)
+        val value = put(vt)
+        (w, c, i) =>
+          val m = c.getMap(i)
+          mapHeader(w, m.numElements())
+          val ks = m.keyArray()
+          val vs = m.valueArray()
+          var j = 0
+          while (j < m.numElements()) { key(w, ks, j); value(w, vs, j); j += 1 }
+      case other => throw new IllegalArgumentException(
+        s"msgpack: unsupported type ${other.simpleString}")
+    }
+    (w, c, i) => if (c.isNullAt(i)) w.b(0xc0) else p(w, c, i)
   }
 
-  private def coerce(v: Any, dt: DataType): Any =
-    if (v == null) null
-    else (dt, v) match {
-      case (LongType, l: Long) => l
-      case (IntegerType, l: Long) => l.toInt
-      case (ShortType, l: Long) => l.toShort
-      case (ByteType, l: Long) => l.toByte
-      case (DoubleType, d: Double) => d
-      case (FloatType, f: Float) => f
-      case (st: StructType, arr: Vector[Any] @unchecked) =>
-        coerceRow(arr, st)
-      case (ArrayType(et, _), arr: Vector[Any] @unchecked) =>
-        arr.map(coerce(_, et))
-      case (MapType(kt, vt, _), m: Map[Any, Any] @unchecked) =>
-        m.map { case (k, mv) => coerce(k, kt) -> coerce(mv, vt) }
-      // expected passthroughs, matched EXPLICITLY: anything else is a
-      // type mismatch and must fail HERE with the field type named, not
-      // later as an opaque RowEncoder ClassCastException
-      case (StringType, s: String) => s
-      case (BooleanType, b: Boolean) => b
-      case (BinaryType, b: Array[Byte]) => b
-      case _ => throw new IllegalArgumentException(
+  private def putRow(w: Writer, row: InternalRow, fields: Array[Put]): Unit = {
+    arrayHeader(w, fields.length)
+    var k = 0
+    while (k < fields.length) { fields(k)(w, row, k); k += 1 }
+  }
+
+  /** Reader of one value as Spark type `dt`; nil reads as null. A value
+    * of another msgpack type is re-read generically to name it in the
+    * error, as the value-tree path reports it.
+    */
+  private def get(dt: DataType): Reader => Any = {
+    def mismatch(r: Reader, start: Int): Nothing = {
+      r.pos = start
+      val v = readValue(r)
+      throw new IllegalArgumentException(
         s"msgpack: cannot decode ${v.getClass.getSimpleName} value" +
           s" '$v' as ${dt.simpleString}")
     }
+    def integer(r: Reader): Long = {
+      val start = r.pos
+      val t = r.u8()
+      if (t <= 0x7f) t.toLong
+      else if (t >= 0xe0) (t - 256).toLong
+      else t match {
+        case 0xcc => r.u8().toLong
+        case 0xcd => r.u16().toLong
+        case 0xce => r.u32()
+        case 0xcf => r.u64()
+        case 0xd0 => r.i8().toLong
+        case 0xd1 => r.u16().toShort.toLong
+        case 0xd2 => r.u32().toInt.toLong
+        case 0xd3 => r.u64()
+        case _ => mismatch(r, start)
+      }
+    }
+    def length(r: Reader, fix: Int, fixBits: Int, b8: Int, b16: Int,
+        b32: Int): Int = {
+      val start = r.pos
+      val t = r.u8()
+      if (fix >= 0 && (t & ~fixBits) == fix) t & fixBits
+      else if (t == b8) r.u8()
+      else if (t == b16) r.u16()
+      else if (t == b32) r.u32().toInt
+      else mismatch(r, start)
+    }
+    def arrayLength(r: Reader) = length(r, 0x90, 0x0f, -1, 0xdc, 0xdd)
+    val g: Reader => Any = dt match {
+      case LongType => r => integer(r)
+      case IntegerType => r => integer(r).toInt
+      case ShortType => r => integer(r).toShort
+      case ByteType => r => integer(r).toByte
+      case DoubleType => r =>
+        if (r.peek() != 0xcb) mismatch(r, r.pos)
+        r.u8()
+        java.lang.Double.longBitsToDouble(r.u64())
+      case FloatType => r =>
+        if (r.peek() != 0xca) mismatch(r, r.pos)
+        r.u8()
+        java.lang.Float.intBitsToFloat(r.u32().toInt)
+      case BooleanType => r => r.peek() match {
+        case 0xc2 => r.u8(); false
+        case 0xc3 => r.u8(); true
+        case _ => mismatch(r, r.pos)
+      }
+      case StringType => r => r.utf8(length(r, 0xa0, 0x1f, 0xd9, 0xda, 0xdb))
+      case BinaryType => r => r.raw(length(r, -1, 0, 0xc4, 0xc5, 0xc6))
+      case st: StructType =>
+        val fields = st.fields.map(f => get(f.dataType))
+        val required = st.fields.map(!_.nullable)
+        r => readRow(r, arrayLength(r), st, fields, required)
+      case ArrayType(et, _) =>
+        val item = get(et)
+        r => {
+          val n = arrayLength(r)
+          val out = new Array[Any](n)
+          var j = 0
+          while (j < n) { out(j) = item(r); j += 1 }
+          new GenericArrayData(out)
+        }
+      case MapType(kt, vt, _) =>
+        val key = get(kt)
+        val value = get(vt)
+        r => {
+          val n = length(r, 0x80, 0x0f, -1, 0xde, 0xdf)
+          val ks = new Array[Any](n)
+          val vs = new Array[Any](n)
+          var j = 0
+          while (j < n) { ks(j) = key(r); vs(j) = value(r); j += 1 }
+          ArrayBasedMapData(ks, vs)
+        }
+      case NullType => r => mismatch(r, r.pos)
+      case other => throw new IllegalArgumentException(
+        s"msgpack: unsupported type ${other.simpleString}")
+    }
+    r => if (r.peek() == 0xc0) { r.u8(); null } else g(r)
+  }
+
+  private def readRow(r: Reader, n: Int, st: StructType,
+      fields: Array[Reader => Any], required: Array[Boolean]): InternalRow = {
+    require(n == fields.length,
+      s"msgpack: tuple arity $n != schema ${fields.length}")
+    val out = new Array[Any](n)
+    var k = 0
+    while (k < n) {
+      out(k) = fields(k)(r)
+      if (out(k) == null && required(k)) throw new IllegalArgumentException(
+        s"msgpack: null for non-nullable field ${st.fields(k).name}")
+      k += 1
+    }
+    new GenericInternalRow(out)
+  }
+
+  /** Compiled `flatten_msgpack` framing of one struct type. */
+  final class FlatEncoder(schema: StructType) extends Codec {
+    @transient private lazy val fields = schema.fields.map(f => put(f.dataType))
+    @transient private lazy val buffers =
+      ThreadLocal.withInitial[Writer](() => new Writer)
+    def apply(input: AnyRef): AnyRef = {
+      val w = buffers.get()
+      w.reset()
+      putRow(w, input.asInstanceOf[InternalRow], fields)
+      w.result()
+    }
+  }
+
+  /** Compiled `unflatten_msgpack` reader of one struct type. */
+  final class FlatDecoder(schema: StructType) extends PayloadDecoder {
+    @transient private lazy val tuple = get(schema)
+    protected def decode(bytes: Array[Byte]): AnyRef = {
+      if (bytes == null) throw new IllegalArgumentException(
+        "msgpack: null payload")
+      val r = new Reader(bytes)
+      val t = r.peek()
+      if ((t & 0xf0) != 0x90 && t != 0xdc && t != 0xdd)
+        throw new IllegalArgumentException(
+          s"msgpack: expected a tuple array, got ${readValue(r)}")
+      val row = tuple(r)
+      checkEnd(r, bytes)
+      row.asInstanceOf[AnyRef]
+    }
+  }
+}
+
+/** [[Msgpack.encodeFlat]] of one struct value. */
+case class EncodeFlat(child: Expression) extends CodecExpression {
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = false
+  @transient lazy val codec: Codec =
+    new Msgpack.FlatEncoder(child.dataType.asInstanceOf[StructType])
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** [[Msgpack.decodeFlat]] of one payload; a null payload is an error. */
+case class DecodeFlat(child: Expression, schema: StructType)
+    extends CodecExpression {
+  override def dataType: DataType = schema
+  override def nullable: Boolean = false
+  @transient lazy val codec: Codec = new Msgpack.FlatDecoder(schema)
+  override def eval(input: InternalRow): Any =
+    codec(child.eval(input).asInstanceOf[AnyRef])
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }

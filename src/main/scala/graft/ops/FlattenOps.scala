@@ -227,17 +227,30 @@ object FlattenOps {
     case um: Mapping.UnionM => unionValue(c, um, src, depth)
   }
 
+  /** `transform(src, f)`, or `src` itself when `f` returns its element
+    * unchanged: higher-order functions do not generate code, so even an
+    * identity lambda keeps its projection out of whole-stage codegen.
+    */
+  private def elements(src: Column, f: Column => Column): Column = {
+    val x = lit(null)
+    if (f(x) eq x) src else transform(src, f)
+  }
+
+  /** [[elements]] for map values. */
+  private def values(src: Column, f: Column => Column): Column = {
+    val x = lit(null)
+    if (f(x) eq x) src else transform_values(src, (_: Column, v: Column) => f(v))
+  }
+
   def arrayValue(c: Compiled, am: Mapping.ArrayM, src: Column,
       depth: Map[String, Int] = Map.empty): Column = {
-    val body = (x: Column) => valueOf(c, am.nested, x, depth)
-    val out = transform(src, body)
+    val out = elements(src, x => valueOf(c, am.nested, x, depth))
     if (am.nullable) when(src.isNotNull, out).otherwise(lit(null)) else out
   }
 
   def mapValue(c: Compiled, mm: Mapping.MapM, src: Column,
       depth: Map[String, Int] = Map.empty): Column = {
-    val out = transform_values(src, (_: Column, v: Column) =>
-      valueOf(c, mm.nested, v, depth))
+    val out = values(src, v => valueOf(c, mm.nested, v, depth))
     if (mm.nullable) when(src.isNotNull, out).otherwise(lit(null)) else out
   }
 
@@ -512,12 +525,11 @@ object FlattenOps {
     case em: Mapping.EnumM => enumI2S(em, slots(cursor.take()))
     case am: Mapping.ArrayM =>
       // array occupies one slot; elements are flat-form values
-      val src = slots(cursor.take())
-      transform(src, x => unflattenNested(c, am.nested, x, depth))
+      elements(slots(cursor.take()),
+        x => unflattenNested(c, am.nested, x, depth))
     case mm: Mapping.MapM =>
-      val src = slots(cursor.take())
-      transform_values(src, (_: Column, v: Column) =>
-        unflattenNested(c, mm.nested, v, depth))
+      values(slots(cursor.take()),
+        v => unflattenNested(c, mm.nested, v, depth))
     case rm: Mapping.RecordM if !rm.nullable =>
       // inline: consume each writer field's slots
       val fields = unflattenRecord(c, rm, slots, cursor, depth)
@@ -542,10 +554,9 @@ object FlattenOps {
     case Mapping.FixedM(_, _) => src
     case em: Mapping.EnumM => enumI2S(em, src)
     case am: Mapping.ArrayM =>
-      transform(src, x => unflattenNested(c, am.nested, x, depth))
+      elements(src, x => unflattenNested(c, am.nested, x, depth))
     case mm: Mapping.MapM =>
-      transform_values(src, (_: Column, v: Column) =>
-        unflattenNested(c, mm.nested, v, depth))
+      values(src, v => unflattenNested(c, mm.nested, v, depth))
     case rm: Mapping.RecordM =>
       val nm = rm.to.fullName
       if (depth.getOrElse(nm, 0) >= SchemaConverters.MaxRecursionDepth)

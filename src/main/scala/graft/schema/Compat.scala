@@ -241,8 +241,12 @@ object Compat {
     } catch { case e: Throwable => ctx.mem.remove(key); throw e }
   }
 
-  /** Identity mapping of a type onto itself (always succeeds). */
-  private def buildSelf(ctx: Ctx, t: AvroType): Mapping = build(ctx, t, t)
+  /** Identity mapping of a writer type onto itself (always succeeds). Its
+    * named types may exist in the writer schema only, so both sides
+    * resolve there.
+    */
+  private def buildSelf(ctx: Ctx, t: AvroType): Mapping =
+    build(new Ctx(ctx.writer, ctx.writer, ctx.downgrade), t, t)
 
   private def buildUnion(ctx: Ctx, from: AvroType, to: AvroType): Mapping =
     inFrame(ctx, from, to) { _ =>

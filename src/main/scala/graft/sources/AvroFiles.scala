@@ -1,7 +1,11 @@
 package graft.sources
 
-import graft.functions.AvroBinary
+import graft.functions.{AvroBinary, AvroCodec}
 import graft.schema.AvroSchema
+import org.apache.avro.Schema
+import org.apache.avro.file.{DataFileStream, DataFileWriter}
+import org.apache.avro.io.{DatumReader, DatumWriter, Decoder, Encoder}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,7 +18,8 @@ import org.apache.spark.sql.types._
   * markers, but whole-file tasks parallelize across the thousands of
   * files a 100 TB dataset ships as); each task streams the container
   * with avro-java's `DataFileStream`, re-frames records as single-record
-  * payloads, and the existing [[AvroBinary.fromAvroBinary]] Catalyst
+  * payloads (cut by the compiled codec's skip routines), and the existing
+  * [[AvroBinary.fromAvroBinary]] Catalyst
   * expression decodes them WITH reader-schema evolution (aliases,
   * promotions, default fill) — one verified decode path for columns,
   * streams and files. [[readStream]] is the same pipeline over the
@@ -37,15 +42,16 @@ object AvroFiles {
     StructField("content", BinaryType)))
 
   /** The shared per-file decode core: one container's bytes → re-framed
-    * single-record Avro payloads (file path kept for lineage).
+    * single-record payloads (file path kept for lineage). Blocks are cut
+    * into records by skipping through them with the writer schema's
+    * compiled decoder; nothing is decoded here.
     */
   private def reframe(writerJson: String)(
       file: String, bytes: Array[Byte]): Seq[(String, Array[Byte])] = {
-    val jWriter = new org.apache.avro.Schema.Parser().parse(writerJson)
+    val jWriter = new Schema.Parser().parse(writerJson)
+    val records = AvroCodec.decoder(writerJson, writerJson)
     val in = new java.io.ByteArrayInputStream(bytes)
-    val reader = new org.apache.avro.generic.GenericDatumReader[
-      org.apache.avro.generic.GenericRecord]()
-    val stream = new org.apache.avro.file.DataFileStream(in, reader)
+    val stream = new DataFileStream[AnyRef](in, WholeBlocks)
     try {
       val fileSchema = stream.getSchema
       if (fileSchema != jWriter)
@@ -53,22 +59,44 @@ object AvroFiles {
           s"$file: container schema ${fileSchema.getFullName} does " +
             s"not match the declared writer schema " +
             s"${jWriter.getFullName}")
-      val datumWriter = new org.apache.avro.generic.GenericDatumWriter[
-        org.apache.avro.generic.GenericRecord](fileSchema)
-      val out = new java.io.ByteArrayOutputStream()
       val buf = scala.collection.mutable.ArrayBuffer
         .empty[(String, Array[Byte])]
       while (stream.hasNext) {
-        val rec = stream.next()
-        out.reset()
-        val enc = org.apache.avro.io.EncoderFactory.get()
-          .binaryEncoder(out, null)
-        datumWriter.write(rec, enc)
-        enc.flush()
-        buf += ((file, out.toByteArray))
+        val n = stream.getBlockCount
+        val block = stream.nextBlock()
+        val data = new Array[Byte](block.remaining())
+        block.duplicate().get(data)
+        records.split(data, n).foreach(r => buf += ((file, r)))
       }
       buf.toSeq
     } finally stream.close()
+  }
+
+  /** `DataFileStream` insists on a datum reader; [[reframe]] takes whole
+    * blocks with `nextBlock`, so it never reads a datum.
+    */
+  private object WholeBlocks extends DatumReader[AnyRef] {
+    def setSchema(schema: Schema): Unit = ()
+    def read(reuse: AnyRef, in: Decoder): AnyRef =
+      throw new UnsupportedOperationException("whole blocks only")
+  }
+
+  /** Payloads written as they are: [[write]] encodes them itself. */
+  private object Encoded extends DatumWriter[Array[Byte]] {
+    def setSchema(schema: Schema): Unit = ()
+    def write(payload: Array[Byte], out: Encoder): Unit =
+      out.writeFixed(payload)
+  }
+
+  /** Write `rows` (object form of `schema`) as one `.avro` container file. */
+  def write(file: java.io.File, schema: AvroSchema,
+      rows: Iterator[InternalRow]): Unit = {
+    val json = schema.exportString
+    val encoder = AvroCodec.encoder(json)
+    val w = new DataFileWriter[Array[Byte]](Encoded)
+    w.create(new Schema.Parser().parse(json), file)
+    try rows.foreach(r => w.append(encoder(r).asInstanceOf[Array[Byte]]))
+    finally w.close()
   }
 
   private def decode(files: Dataset[(String, Array[Byte])],

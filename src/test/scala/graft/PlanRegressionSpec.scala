@@ -159,4 +159,62 @@ class PlanRegressionSpec extends AnyFunSuite with SparkTestBase {
     val optimized = df.queryExecution.optimizedPlan.toString
     assert("from_json".r.findAllIn(optimized).size == 1, optimized)
   }
+
+  test("the codec chain runs inside whole-stage codegen end to end") {
+    import graft.functions.{AvroBinary, DecodeFlat, EncodeFlat,
+      FromAvroBinary, Msgpack, ToAvroBinary}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.functions._
+    val v1 = graft.schema.Avro.create(
+      """{"name":"person","type":"record","fields":[
+      {"name":"FirstName","type":"string"},{"name":"Age","type":"int"},
+      {"name":"Sex","type":{"type":"enum","name":"Sex",
+        "symbols":["FEMALE","MALE"]}},
+      {"name":"Journal","type":{"type":"array","items":"string"}},
+      {"name":"Legacy","type":"long"}]}""")
+    val v2 = graft.schema.Avro.create(
+      """{"name":"person","type":"record","fields":[
+      {"name":"GivenName","type":"string","aliases":["FirstName"]},
+      {"name":"Age","type":"long"},
+      {"name":"Sex","type":{"type":"enum","name":"Sex",
+        "symbols":["FEMALE","MALE","OTHER"]}},
+      {"name":"Journal","type":{"type":"array","items":"string"}},
+      {"name":"Country","type":"string","default":"ZZ"}]}""")
+    val input = spark.range(200).select(col("id"), AvroBinary.toAvroBinary(
+      struct(concat(lit("n"), col("id")), col("id").cast("int"),
+        when(col("id") % 2 === 0, "MALE").otherwise("FEMALE"),
+        array(lit("a"), col("id").cast("string")), col("id")), v1)
+      .as("payload"))
+    val decoded = input.select(col("id"),
+        AvroBinary.fromAvroBinary(col("payload"), v1, v2).as("r"))
+      .select(col("id"), col("r.*"))
+    val valid = graft.ops.Validate(v2, decoded).filter(col("_valid"))
+      .drop("_error", "_valid")
+    val c = graft.ops.FlattenOps.compile(v2, v2,
+      serviceFields = Seq(org.apache.spark.sql.types.LongType))
+      .fold(e => fail(e), identity)
+    val flat = c.flatten(valid, Seq(col("id")))
+    val objects = c.unflatten(Msgpack.decodeFlat(Msgpack.encodeFlat(flat),
+      "msgpack", flat.schema))
+    val avro = objects.select(col("sf0").as("id"), AvroBinary.toAvroBinary(
+      struct(objects.columns.drop(1).toIndexedSeq.map(col): _*), v2))
+    val plan = avro.queryExecution.executedPlan
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case other => other.children.flatMap(stage)
+    })
+    val fused = plan.collect { case w: WholeStageCodegenExec =>
+      stage(w.child) }.flatten
+    val withCodec = plan.collect { case p if p.expressions.exists(_.exists {
+      case _: FromAvroBinary | _: ToAvroBinary | _: EncodeFlat |
+          _: DecodeFlat => true
+      case _ => false
+    }) => p }
+    assert(withCodec.length >= 3, plan.toString)
+    for (p <- withCodec)
+      assert(fused.exists(_ eq p), s"outside codegen: ${p.nodeName}\n$plan")
+    assert(avro.count() == 200)
+  }
 }
+

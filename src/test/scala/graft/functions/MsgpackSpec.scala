@@ -3,6 +3,7 @@ package graft.functions
 import graft.SparkTestBase
 import graft.ops.FlattenOps
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ratifies the msgpack wire framing (see Msgpack object doc): golden
@@ -84,5 +85,39 @@ class MsgpackSpec extends AnyFunSuite with SparkTestBase {
     val a = flat.collect().map(r => hex(Msgpack.encode(r))).sorted
     val b = rt.collect().map(r => hex(Msgpack.encode(r))).sorted
     assert(a.length == 100 && a.sameElements(b))
+  }
+
+  private val tuple = StructType(Seq(StructField("id", LongType),
+    StructField("name", StringType), StructField("tags",
+      ArrayType(StringType))))
+
+  test("encodeFlat → decodeFlat runs on InternalRow: no object round trip") {
+    val df = spark.range(3).select(col("id"),
+      concat(lit("doc"), col("id")).as("name"),
+      array(lit("t1"), lit("t2")).as("tags"))
+    val rt = Msgpack.decodeFlat(Msgpack.encodeFlat(df), "msgpack", df.schema)
+    val plan = rt.queryExecution.executedPlan.toString
+    for (node <- Seq("DeserializeToObject", "SerializeFromObject",
+        "MapPartitions"))
+      assert(!plan.contains(node), plan)
+    assert(rt.schema == df.schema)
+    assert(rt.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
+  }
+
+  private def decodeError(payload: Array[Byte]): String = {
+    import spark.implicits._
+    intercept[Exception](Msgpack.decodeFlat(Seq(payload).toDF("msgpack"),
+      "msgpack", tuple).collect()).getMessage
+  }
+
+  test("decode failures: arity, field type, trailing bytes") {
+    val arity = decodeError(Msgpack.encode(Seq(1L, "x")))
+    assert(arity.contains("msgpack: tuple arity 2 != schema 3"), arity)
+    val typed = decodeError(Msgpack.encode(Seq(1L, 2L, Seq("t"))))
+    assert(typed.contains(
+      "msgpack: cannot decode Long value '2' as string"), typed)
+    val trailing = decodeError(
+      Msgpack.encode(Seq(1L, "x", Seq("t"))) ++ Array[Byte](0))
+    assert(trailing.contains("msgpack: 1 trailing bytes"), trailing)
   }
 }
