@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Persisted Bloom-filter membership sidecar — the set-membership
   * member of the sketch family ([[Sketches]] counts distincts,
@@ -165,52 +164,26 @@ object Bloom {
       p.getAs[Long]("num_hashes").toInt)
   }
 
-  /** Fold a new batch of keys into the stored sidecar at batch cost:
-    * sketch the batch at the STORED operating point, merge by
-    * `bit_or` (union semantics — re-folding the same batch is exactly
-    * a no-op), rewrite through a bounded collect and the
-    * [[SidecarIO.atomicOverwrite]] swap (a crash mid-rewrite can no
-    * longer lose the only accumulated copy).
+  /** Fold a new batch of keys into the stored sidecar at batch cost
+    * ([[filterFold]] from disk).
     */
   def updateFilter(spark: SparkSession, path: String, batch: DataFrame,
-      keyCol: String): Unit = {
-    updateFilterCarried(spark, path, batch, keyCol, carried = None)
-    ()
-  }
+      keyCol: String): Unit =
+    filterFold(keyCol).update(spark, path, batch)
 
-  /** Fold state carried across a stream's batches (see
-    * [[CountMin.CmsFoldState]] for the discipline): the operating point
-    * plus the exact row set of the last written `words` generation —
-    * equals the on-disk sidecar by induction; drop on any failed fold.
+  /** The sidecar's [[SidecarFold]]: sketch the batch at the STORED
+    * operating point and merge by `bit_or` — union semantics, so
+    * re-folding the same batch is exactly a no-op and `batchId` is
+    * ignored.
     */
-  final case class BloomFoldState(numBits: Int, numHashes: Int,
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  /** [[updateFilter]] with the carried fold state — no params read, no
-    * stored-words read per micro-batch; identical on-disk result.
-    */
-  def updateFilterCarried(spark: SparkSession, path: String,
-      batch: DataFrame, keyCol: String,
-      carried: Option[BloomFoldState] = None): BloomFoldState = {
-    val st = carried.getOrElse {
-      val p = spark.read.json(s"$path/params").head()
-      val stored = SidecarIO.readWithFallback(spark, s"$path/words")
-      BloomFoldState(p.getAs[Long]("num_bits").toInt,
-        p.getAs[Long]("num_hashes").toInt, stored.collect().toSeq,
-        stored.schema)
+  def filterFold(keyCol: String): SidecarFold[SidecarFold.Collected] =
+    SidecarFold.collected("words") { (spark, st, batch, _) =>
+      Some(st.frame(spark)
+        .unionAll(sketch(batch, keyCol, st.int("num_bits"),
+          st.int("num_hashes")))
+        .groupBy("word_idx")
+        .agg(bit_or(col("bits")).as("bits")))
     }
-    val merged = spark.createDataFrame(
-        java.util.Arrays.asList(st.rows: _*), st.schema)
-      .unionAll(sketch(batch, keyCol, st.numBits, st.numHashes))
-      .groupBy("word_idx")
-      .agg(bit_or(col("bits")).as("bits"))
-    val rows = merged.collect().toSeq
-    SidecarIO.atomicOverwrite(spark,
-      java.util.Arrays.asList(rows: _*), merged.schema,
-      s"$path/words")
-    BloomFoldState(st.numBits, st.numHashes, rows, merged.schema)
-  }
 
   /** Bloom-pruned exact equi-join: prune the FACT side map-only with
     * a filter built from the dim keys, then run the exact join — the

@@ -89,12 +89,16 @@ object BottomK {
       .write.mode("overwrite").json(s"$path/params")
   }
 
-  /** Fold a new batch into the stored sketch at batch cost: sketch the
-    * batch at the sidecar's STORED operating point, union, re-trim to
-    * k. The merged rows are collected before the overwrite (k rows,
-    * bounded by construction) because a plan that lazily reads the path
-    * it overwrites would race itself — the [[Sketches.updateSketches]]
-    * discipline. Folding the same batch twice is EXACTLY a no-op: the
+  /** Fold a new batch into the stored sketch at batch cost
+    * ([[sketchFold]] from disk).
+    */
+  def updateSketch(spark: SparkSession, path: String,
+      batch: DataFrame): Unit =
+    sketchFold.update(spark, path, batch)
+
+  /** The sidecar's [[SidecarFold]]: sketch the batch at the sidecar's
+    * STORED operating point, union, re-trim to k. Folding the same
+    * batch twice is EXACTLY a no-op (so `batchId` is ignored): the
     * merge deduplicates on `(h, v)` before the re-trim, so a re-folded
     * batch's rows are already present (or already beaten) and cannot
     * displace genuine bottom-k entries through multiplicity. The
@@ -102,44 +106,15 @@ object BottomK {
     * sharing both key and value collapse, which is exactly the
     * identity the sketch can observe.
     */
-  def updateSketch(spark: SparkSession, path: String,
-      batch: DataFrame): Unit = {
-    updateSketchCarried(spark, path, batch, carried = None)
-    ()
-  }
-
-  /** Fold state carried across a stream's batches (see
-    * [[CountMin.CmsFoldState]] for the discipline): the operating point
-    * plus the exact row set of the last written generation — the
-    * per-fold params + sample reads go away; identical on-disk result.
-    */
-  final case class BottomKFoldState(k: Int, keyCol: String,
-      valueCol: String, rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  /** [[updateSketch]] with the carried fold state. */
-  def updateSketchCarried(spark: SparkSession, path: String,
-      batch: DataFrame,
-      carried: Option[BottomKFoldState] = None): BottomKFoldState = {
-    val st = carried.getOrElse {
-      val p = spark.read.json(s"$path/params").head()
-      val stored = SidecarIO.readWithFallback(spark, s"$path/sample")
-      BottomKFoldState(p.getAs[Long]("k").toInt,
-        p.getAs[String]("keyCol"), p.getAs[String]("valueCol"),
-        stored.collect().toSeq, stored.schema)
+  val sketchFold: SidecarFold[SidecarFold.Collected] =
+    SidecarFold.collected("sample") { (spark, st, batch, _) =>
+      val k = st.int("k")
+      Some(st.frame(spark)
+        .unionAll(sketch(batch, st.str("keyCol"), st.str("valueCol"), k))
+        .dropDuplicates("h", "v")
+        .orderBy(col("h"), col("v"))
+        .limit(k))
     }
-    val merged = spark.createDataFrame(
-        java.util.Arrays.asList(st.rows: _*), st.schema)
-      .unionAll(sketch(batch, st.keyCol, st.valueCol, st.k))
-      .dropDuplicates("h", "v")
-      .orderBy(col("h"), col("v"))
-      .limit(st.k)
-    val rows = merged.collect().toSeq
-    SidecarIO.atomicOverwrite(spark,
-      java.util.Arrays.asList(rows: _*), merged.schema,
-      s"$path/sample")
-    BottomKFoldState(st.k, st.keyCol, st.valueCol, rows, merged.schema)
-  }
 
   /** The stored sample, ready for [[quantiles]]. */
   def readSketch(spark: SparkSession, path: String): DataFrame =

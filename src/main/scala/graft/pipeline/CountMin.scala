@@ -118,72 +118,39 @@ object CountMin {
       p.getAs[Long]("depth").toInt, p.getAs[Long]("width").toInt)
   }
 
-  /** Fold a NEW batch into the stored sidecar at batch cost. The grid
-    * is ADDITIVE, so unlike the bloom's idempotent OR a replayed batch
-    * double-counts — callers with an at-least-once source (Structured
-    * Streaming `foreachBatch` after checkpoint recovery) pass the
-    * batch id, and a batch at or below the last folded id is SKIPPED.
-    * The folded id travels as a sentinel row `(r = -1, c = 0,
-    * cnt = batchId)` inside the SAME atomic cells swap, so the guard
-    * and the counts can never disagree across a crash; [[readSketch]]
-    * and [[estimate]] read through the sentinel-stripping filter.
-    * Bounded collect + [[SidecarIO.atomicOverwrite]].
+  /** Fold a NEW batch into the stored sidecar at batch cost
+    * ([[sketchFold]] from disk).
     */
   def updateSketch(spark: SparkSession, path: String,
-      batch: DataFrame, batchId: Option[Long] = None): Unit = {
-    updateSketchCarried(spark, path, batch, batchId, carried = None)
-    ()
-  }
+      batch: DataFrame, batchId: Option[Long] = None): Unit =
+    sketchFold.update(spark, path, batch, batchId)
 
-  /** Fold state carried ACROSS a stream's batches (the r17 serving-
-    * handle discipline applied to the maintenance side): the sidecar
-    * params plus the EXACT row set of the last written `cells`
-    * generation, sentinel included. Holding it makes a fold's stored
-    * side a `createDataFrame` over rows already in memory instead of a
-    * params read + parquet read + sentinel collect per micro-batch —
-    * three driver round-trips the per-fold contract never needed. The
-    * state is only ever constructed FROM disk or from a successful
-    * atomic swap, so it equals the on-disk sidecar by induction; a
-    * failed fold must drop it (re-read), and a restarted stream starts
-    * from disk anyway.
+  /** The sidecar's [[SidecarFold]]. The grid is ADDITIVE, so unlike the
+    * bloom's idempotent OR a replayed batch double-counts — callers
+    * with an at-least-once source (Structured Streaming `foreachBatch`
+    * after checkpoint recovery) pass the batch id, and a batch at or
+    * below the last folded id is SKIPPED. The folded id travels as a
+    * sentinel row `(r = -1, c = 0, cnt = batchId)` inside the SAME
+    * atomic cells swap, so the guard and the counts can never disagree
+    * across a crash; [[readSketch]] and [[estimate]] read through the
+    * sentinel-stripping filter.
     */
-  final case class CmsFoldState(depth: Int, width: Int, keyCol: String,
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  /** [[updateSketch]] with the carried fold state: pass the previous
-    * fold's return value (None for the first fold / after any failure);
-    * identical on-disk result either way — CI pins stream-vs-direct
-    * fold equality.
-    */
-  def updateSketchCarried(spark: SparkSession, path: String,
-      batch: DataFrame, batchId: Option[Long] = None,
-      carried: Option[CmsFoldState] = None): CmsFoldState = {
-    val st = carried.getOrElse {
-      val p = spark.read.json(s"$path/params").head()
-      val stored = SidecarIO.readWithFallback(spark, s"$path/cells")
-      CmsFoldState(p.getAs[Long]("depth").toInt,
-        p.getAs[Long]("width").toInt, p.getAs[String]("key_col"),
-        stored.collect().toSeq, stored.schema)
+  val sketchFold: SidecarFold[SidecarFold.Collected] =
+    SidecarFold.collected("cells") { (spark, st, batch, batchId) =>
+      val lastFolded = st.rows.find(_.getAs[Int]("r") == -1)
+        .map(_.getAs[Long]("cnt"))
+      if (batchId.exists(id => lastFolded.exists(id <= _))) None
+      else {
+        val merged = merge(st.frame(spark).filter(col("r") >= 0),
+          sketch(batch, st.str("key_col"), st.int("depth"),
+            st.int("width")))
+        Some(batchId.orElse(lastFolded) match {
+          // keep an existing guard through un-id'd folds
+          case Some(id) => merged.unionAll(
+            spark.range(1).select(lit(-1).cast("int").as("r"),
+              lit(0).cast("int").as("c"), lit(id).as("cnt")))
+          case None => merged
+        })
+      }
     }
-    val stored = spark.createDataFrame(
-      java.util.Arrays.asList(st.rows: _*), st.schema)
-    val lastFolded = st.rows.find(_.getAs[Int]("r") == -1)
-      .map(_.getAs[Long]("cnt"))
-    if (batchId.exists(id => lastFolded.exists(id <= _))) return st
-    val merged = merge(stored.filter(col("r") >= 0),
-      sketch(batch, st.keyCol, st.depth, st.width))
-    val withSentinel = batchId.orElse(lastFolded) match {
-      // keep an existing guard through un-id'd folds
-      case Some(id) => merged.unionAll(
-        merged.sparkSession.range(1).select(lit(-1).cast("int").as("r"),
-          lit(0).cast("int").as("c"), lit(id).as("cnt")))
-      case None => merged
-    }
-    val rows = withSentinel.collect().toSeq
-    SidecarIO.atomicOverwrite(spark,
-      java.util.Arrays.asList(rows: _*),
-      withSentinel.schema, s"$path/cells")
-    CmsFoldState(st.depth, st.width, st.keyCol, rows, withSentinel.schema)
-  }
 }

@@ -127,7 +127,7 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
   def loadExactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): LoadedExactIndex =
     LoadedExactIndex(path,
-      spark.read.parquet(s"$path/bloom")
+      SidecarIO.readWithFallback(spark, s"$path/bloom")
         .head().getAs[Array[Byte]]("bloom"),
       dropTombstoned(spark, path,
         IndexDeltas.rows(spark, s"$path/hashes"), "h"))
@@ -171,12 +171,15 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
 
   /** Roll the exact index FORWARD: append contents the index does not
     * yet hold (anti-join on the stored hashes — an index-sized read,
-    * never a corpus rescan) and rebuild the bloom sidecar from the
+    * never a corpus rescan) and rebuild the bloom sidecar over the
     * updated hash set. The bloom rebuild is NOT optional: an appended
     * content missing from the bloom would prefilter to "absent" and
     * resurface as `new` — a false NEGATIVE, the one failure mode the
     * bloom contract forbids (stale-positive after tombstones is safe;
-    * stale-negative after appends is not).
+    * stale-negative after appends is not). So the SUPERSET bloom
+    * (stored hashes ∪ the new delta) swaps in first, through
+    * [[SidecarIO.atomicOverwrite]], and only then does the delta
+    * commit: every crash window leaves a bloom covering the index.
     *
     * The new rows land through the shared [[IndexDeltas]] layer as a
     * batch-stamped `hashes.delta/batch=<id>` directory — EXACTLY-ONCE
@@ -195,6 +198,7 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
     import spark.implicits._
     val id = if (batchId >= 0) batchId
       else IndexDeltas.nextAppendId(spark, s"$path/hashes")
+    val fpp = spark.read.json(s"$path/params").head().getAs[Double]("fpp")
     val existing = IndexDeltas.rows(spark, s"$path/hashes",
       excludeBatchId = id).select("h")
     val delta = docs.select(col(idCol).cast("long").as("id"),
@@ -203,17 +207,19 @@ private[pipeline] trait ExactDedupOps extends Serializable { this: Dedup.type =>
       .agg(min("id").as("keep_id"), count(lit(1)).as("n_copies"))
       .join(existing, Seq("h"), "left_anti")
       .withColumn("hp", substring(col("h"), 1, 2))
-    IndexDeltas.writeDelta(delta, s"$path/hashes", id, Seq("hp"))
-    val idx = IndexDeltas.rows(spark, s"$path/hashes")
-    val fpp = spark.read.json(s"$path/params").head().getAs[Double]("fpp")
+      .localCheckpoint()
+    // the index after this append is exactly existing ∪ delta
+    val idx = existing.unionAll(delta.select("h"))
     val n = math.max(1L, idx.count())
     val bloom = idx.select(xxhash64(col("h")).as("hx"))
       .stat.bloomFilter("hx", if (fpp >= 1) 1L else n,
         if (fpp >= 1) 0.5 else fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    Seq(Tuple1(bos.toByteArray)).toDF("bloom").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/bloom")
+    val bloomDf = Seq(Tuple1(bos.toByteArray)).toDF("bloom")
+    SidecarIO.atomicOverwrite(spark, bloomDf.collectAsList(),
+      bloomDf.schema, s"$path/bloom")
+    IndexDeltas.writeDelta(delta, s"$path/hashes", id, Seq("hp"))
     Seq((n, fpp)).toDF("distinctContents", "fpp").coalesce(1)
       .write.mode("overwrite").json(s"$path/params")
   }

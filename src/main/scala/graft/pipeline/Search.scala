@@ -270,39 +270,40 @@ object Search {
     */
   def updateIndex(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
-      batchId: Option[Long] = None): Unit = {
-    updateIndexCarried(spark, path, batch, idCol, textCol, batchId,
-      carried = None)
-    ()
-  }
+      batchId: Option[Long] = None): Unit =
+    indexFold(idCol, textCol).update(spark, path, batch, batchId)
 
-  /** Fold state carried across a stream's batches (the r17 serving-
-    * handle discipline applied to the maintenance side): the df/stats/
-    * guard sidecar as a frame EQUAL to the on-disk generation (local-
-    * checkpointed after each swap, so no lineage tower) plus its
-    * sentinel values. Holding it removes the per-fold sidecar parquet
-    * read and the sentinel collect job; the swap, the idempotent
-    * postings delta and the replay guard are untouched, so the folded
-    * index stays bit-identical to build-at-once. Drop the state on any
-    * failed fold (re-read from disk); a restarted stream starts from
-    * disk anyway.
+  /** Fold state of the df/stats/guard sidecar: a frame EQUAL to the
+    * on-disk generation (local-checkpointed after each swap, so no
+    * lineage tower) plus its sentinel values.
     */
   final case class Bm25FoldState(dfSide: DataFrame,
       sentinels: Map[String, Long])
 
-  /** [[updateIndex]] with the carried fold state — identical on-disk
-    * result; returns the state for the next fold.
+  /** The index's [[SidecarFold]] (see [[updateIndex]]): the postings
+    * delta lands first, then the df/stats/guard swap; a replayed batch
+    * id is skipped before any write.
     */
-  def updateIndexCarried(spark: SparkSession, path: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      batchId: Option[Long] = None,
-      carried: Option[Bm25FoldState] = None): Bm25FoldState = {
-    val st = carried.getOrElse {
-      val dfSide = SidecarIO.readWithFallback(spark, s"$path/df")
-      Bm25FoldState(dfSide,
-        dfSide.filter(isSentinel(col("tok"))).collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap)
+  def indexFold(idCol: String,
+      textCol: String): SidecarFold[Bm25FoldState] =
+    new SidecarFold[Bm25FoldState] {
+      def load(spark: SparkSession, path: String): Bm25FoldState = {
+        val dfSide = SidecarIO.readWithFallback(spark, s"$path/df")
+        Bm25FoldState(dfSide, sentinelsOf(dfSide))
+      }
+
+      def fold(spark: SparkSession, path: String, st: Bm25FoldState,
+          batch: DataFrame, batchId: Option[Long]): Bm25FoldState =
+        foldIndex(spark, path, st, batch, idCol, textCol, batchId)
     }
+
+  private def sentinelsOf(dfSide: DataFrame): Map[String, Long] =
+    dfSide.filter(isSentinel(col("tok"))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  private def foldIndex(spark: SparkSession, path: String,
+      st: Bm25FoldState, batch: DataFrame, idCol: String,
+      textCol: String, batchId: Option[Long]): Bm25FoldState = {
     val dfSide = st.dfSide
     val sentinels = st.sentinels
     val lastBatch = sentinels.get(SentBatch)
@@ -389,8 +390,7 @@ object Search {
     */
   def readIndex(spark: SparkSession, path: String): Bm25Index = {
     val dfSide = SidecarIO.readWithFallback(spark, s"$path/df")
-    val sentinels = dfSide.filter(isSentinel(col("tok"))).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val sentinels = sentinelsOf(dfSide)
     // base generation + delta floor: compaction renames the base and
     // bumps both in the ONE atomic df swap, so every crash point reads
     // a consistent (base, live-deltas) pair
@@ -442,8 +442,7 @@ object Search {
   def compactIndex(spark: SparkSession, path: String,
       numFiles: Int = 8): Unit = {
     val dfSide = SidecarIO.readWithFallback(spark, s"$path/df")
-    val sentinels = dfSide.filter(isSentinel(col("tok"))).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val sentinels = sentinelsOf(dfSide)
     val ix = readIndex(spark, path)
     val gen = sentinels.getOrElse(SentGen, -1L) + 1
     val newFloor = math.max(sentinels.getOrElse(SentFloor, -1L),

@@ -50,8 +50,11 @@ object ShardedBloom {
     org.apache.spark.sql.types.StructField("shard",
       org.apache.spark.sql.types.IntegerType)))
 
+  /** The stored words as `(shard, word_idx, bits)`. */
   private def readWords(spark: SparkSession, path: String): DataFrame =
     SidecarIO.readWithFallback(spark, s"$path/words", Some(wordsSchema))
+      .select(col("shard").cast("int").as("shard"), col("word_idx"),
+        col("bits"))
 
   private def shardOf(key: Column, numShards: Int): Column =
     pmod(xxhash64(lit(-1), key), lit(numShards.toLong)).cast("int")
@@ -167,70 +170,58 @@ object ShardedBloom {
   /** The stored filter as a resident handle (the broadcastable tier). */
   def readFilter(spark: SparkSession, path: String): ShardedBloomFilter = {
     val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
-    densify(readWords(spark, path)
-        .select(col("shard").cast("int").as("shard"), col("word_idx"),
-          col("bits")),
-      numShards, bitsPerShard, numHashes)
+    densify(readWords(spark, path), numShards, bitsPerShard,
+      numHashes)
   }
 
-  /** Fold a new batch into the stored sidecar: per-(shard, word)
-    * bitwise OR at batch cost — FULLY DISTRIBUTED. The stored words
-    * and the batch sketch union into one `groupBy(shard, word_idx) →
-    * bit_or` (idempotent, order-insensitive), and the merged frame is
-    * swapped in by [[SidecarIO.atomicOverwriteDf]] with the same
-    * `partitionBy(shard)` layout [[writeFilter]] wrote — nothing ever
-    * lands on the driver, so the daily-ingest fold works at the tier's
-    * design point (10^10–10^11 keys ⇒ 10^9+ word rows, tens of GB):
-    * one shard exchange per fold, each shard's directory rewritten
-    * from its own partition. The tmp write materializes the merged
-    * plan in full while the live generation is still intact, so the
-    * read-modify-write cannot race itself and a crash in any window
-    * leaves a complete generation on disk.
+  /** Fold a new batch into the stored sidecar ([[filterFold]] from
+    * disk).
     */
   def updateFilter(spark: SparkSession, path: String, batch: DataFrame,
-      keyCol: String): Unit = {
-    updateFilterCarried(spark, path, batch, keyCol, carried = None)
-    ()
-  }
+      keyCol: String): Unit =
+    filterFold(keyCol).update(spark, path, batch)
 
-  /** Fold state carried across a stream's batches, the DISTRIBUTED
-    * tier's variant (nothing driver-resident at any size, so unlike
-    * [[Bloom.BloomFoldState]] the words ride as a LOCAL-CHECKPOINTED
-    * frame, not collected rows): the operating point plus a frame equal
-    * to the on-disk `words` generation. Holding it saves the params
-    * read + the partitioned-words read (directory listing + scan) per
-    * micro-batch; the checkpoint that replaces them is one pass over
-    * the merged rows the swap was about to write anyway. Drop on any
-    * failed fold; a restarted stream starts from disk.
+  /** Fold state of the DISTRIBUTED tier (nothing driver-resident at any
+    * size, so unlike [[SidecarFold.Collected]] the words ride as a
+    * LOCAL-CHECKPOINTED frame): the operating point plus a frame equal
+    * to the on-disk `words` generation.
     */
   final case class ShardedBloomFoldState(numShards: Int,
       bitsPerShard: Int, numHashes: Int, words: DataFrame)
 
-  /** [[updateFilter]] with the carried fold state — identical on-disk
-    * result (same union → bit_or merge, same partitioned atomic swap).
+  /** The sidecar's [[SidecarFold]]: per-(shard, word) bitwise OR at
+    * batch cost — FULLY DISTRIBUTED. The stored words and the batch
+    * sketch union into one `groupBy(shard, word_idx) → bit_or`
+    * (idempotent, order-insensitive, so `batchId` is ignored), and the
+    * merged frame is swapped in by [[SidecarIO.atomicOverwriteDf]] with
+    * the same `partitionBy(shard)` layout [[writeFilter]] wrote —
+    * nothing lands on the driver, so the daily-ingest fold works at the
+    * tier's design point (10^10–10^11 keys ⇒ 10^9+ word rows, tens of
+    * GB): one shard exchange per fold. The merged frame is checkpointed
+    * before the swap, so the read-modify-write cannot race itself, and
+    * the checkpoint is the state the next fold starts from.
     */
-  def updateFilterCarried(spark: SparkSession, path: String,
-      batch: DataFrame, keyCol: String,
-      carried: Option[ShardedBloomFoldState] = None)
-      : ShardedBloomFoldState = {
-    val st = carried.getOrElse {
-      val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
-      ShardedBloomFoldState(numShards, bitsPerShard, numHashes,
-        readWords(spark, path)
-          .select(col("shard").cast("int").as("shard"), col("word_idx"),
-            col("bits")))
+  def filterFold(keyCol: String): SidecarFold[ShardedBloomFoldState] =
+    new SidecarFold[ShardedBloomFoldState] {
+      def load(spark: SparkSession, path: String): ShardedBloomFoldState = {
+        val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
+        ShardedBloomFoldState(numShards, bitsPerShard, numHashes,
+          readWords(spark, path))
+      }
+
+      def fold(spark: SparkSession, path: String, st: ShardedBloomFoldState,
+          batch: DataFrame, batchId: Option[Long]): ShardedBloomFoldState = {
+        val merged = st.words
+          .unionAll(sketch(batch, keyCol, st.numShards, st.bitsPerShard,
+            st.numHashes))
+          .groupBy("shard", "word_idx")
+          .agg(bit_or(col("bits")).as("bits"))
+          .localCheckpoint(true)
+        SidecarIO.atomicOverwriteDf(merged, s"$path/words",
+          partitionCols = Seq("shard"))
+        st.copy(words = merged)
+      }
     }
-    val merged = st.words
-      .unionAll(sketch(batch, keyCol, st.numShards, st.bitsPerShard,
-        st.numHashes))
-      .groupBy("shard", "word_idx")
-      .agg(bit_or(col("bits")).as("bits"))
-      .localCheckpoint(true)
-    SidecarIO.atomicOverwriteDf(merged, s"$path/words",
-      partitionCols = Seq("shard"))
-    ShardedBloomFoldState(st.numShards, st.bitsPerShard, st.numHashes,
-      merged)
-  }
 
   /** The nothing-resident probe: prune `fact` to the rows whose key
     * MIGHT be in the sidecar set, by cogrouping fact rows with the
@@ -257,8 +248,6 @@ object ShardedBloom {
       keepMatches: Boolean): DataFrame = {
     val (numShards, bitsPerShard, numHashes) = readParams(spark, path)
     val words = readWords(spark, path)
-      .select(col("shard").cast("int").as("shard"), col("word_idx"),
-        col("bits"))
 
     val keyed = fact
       .withColumn("_gb_shard", shardOf(col(factKey), numShards))

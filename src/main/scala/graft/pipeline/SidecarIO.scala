@@ -13,6 +13,11 @@ import org.apache.spark.sql.types.StructType
   * every crash window leaves at least one complete generation on disk,
   * and [[readWithFallback]] serves `_prev` if the live dir is missing
   * (the one window where a crash interrupts the swap).
+  *
+  * The fold contract ([[SidecarFold]]) is built on these two halves:
+  * every sidecar fold loads through [[readWithFallback]] and writes
+  * only through [[atomicOverwrite]] / [[atomicOverwriteDf]], never a
+  * `mode("overwrite")` on a live dir.
   */
 object SidecarIO {
 

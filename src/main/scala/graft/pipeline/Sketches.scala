@@ -51,56 +51,31 @@ object Sketches {
   }
 
   /** Fold a new batch into the stored sketches — batch-sized cost, no
-    * corpus rescan. The batch is sketched at the sidecar's STORED lgK
-    * (part of the sketch identity, like index params), unioned per
-    * column, and the sidecar rewritten. The merged rows are collected
-    * before the overwrite — one row per column, KB each, bounded by
-    * construction — because overwriting a path that the writing plan
-    * still reads lazily would race itself.
+    * corpus rescan ([[sketchesFold]] from disk).
     */
   def updateSketches(spark: SparkSession, path: String,
-      batch: DataFrame): Unit = {
-    updateSketchesCarried(spark, path, batch, carried = None)
-    ()
-  }
+      batch: DataFrame): Unit =
+    sketchesFold.update(spark, path, batch)
 
-  /** Fold state carried across a stream's batches (see
-    * [[CountMin.CmsFoldState]] for the discipline): lgK/cols plus the
-    * exact row set of the last written generation — the per-fold params
-    * + sketches reads go away; the merge stays the same Spark
-    * `hll_union_agg` over the same rows, so the folded sketch bytes are
-    * unchanged.
+  /** The sidecar's [[SidecarFold]]: the batch is sketched at the
+    * sidecar's STORED lgK (part of the sketch identity, like index
+    * params) and unioned per column. Register max is idempotent — a
+    * re-folded batch adds no coupons — so `batchId` is ignored.
     */
-  final case class HllFoldState(lgK: Int, cols: Seq[String],
-      rows: Seq[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  /** [[updateSketches]] with the carried fold state. */
-  def updateSketchesCarried(spark: SparkSession, path: String,
-      batch: DataFrame,
-      carried: Option[HllFoldState] = None): HllFoldState = {
-    val st = carried.getOrElse {
-      val p = spark.read.json(s"$path/params").head()
-      val stored = spark.read.parquet(s"$path/sketches")
-      HllFoldState(p.getAs[Long]("lgK").toInt,
-        p.getAs[String]("cols").split(",").toSeq,
-        stored.collect().toSeq, stored.schema)
+  val sketchesFold: SidecarFold[SidecarFold.Collected] =
+    SidecarFold.collected("sketches") { (spark, st, batch, _) =>
+      Some(st.frame(spark)
+        .union(columnSketches(batch, st.str("cols").split(",").toSeq,
+          st.int("lgK")))
+        .groupBy("col_name")
+        .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch")))
     }
-    val merged = spark.createDataFrame(
-        java.util.Arrays.asList(st.rows: _*), st.schema)
-      .union(columnSketches(batch, st.cols, st.lgK))
-      .groupBy("col_name")
-      .agg(hll_union_agg(col("sketch"), lit(false)).as("sketch"))
-    val rows = merged.collect().toSeq
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-        merged.schema).coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/sketches")
-    HllFoldState(st.lgK, st.cols, rows, merged.schema)
-  }
 
-  /** Distinct-count estimates from a persisted sidecar. */
+  /** Distinct-count estimates from a persisted sidecar (a crashed swap
+    * serves the previous generation).
+    */
   def estimates(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/sketches")
+    SidecarIO.readWithFallback(spark, s"$path/sketches")
       .select(col("col_name"),
         hll_sketch_estimate(col("sketch")).as("n_distinct_est"))
 }

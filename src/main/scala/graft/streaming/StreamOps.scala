@@ -430,6 +430,28 @@ object StreamOps {
         idCol, textCol, benchTextCol, shingleSize)
     }
 
+  /** Sidecar maintenance from a stream: each micro-batch goes through
+    * `fold` ([[graft.pipeline.SidecarFold]]) with its foreachBatch id.
+    * The fold state is carried across batches (the serving-handle
+    * discipline on the maintenance side): the params and the last
+    * written generation ride in memory instead of being re-read per
+    * micro-batch. Any failed fold drops the state, so the next fold —
+    * on this query or a restart of the same writer — reloads from disk.
+    */
+  private def foldStream[S](stream: DataFrame,
+      fold: graft.pipeline.SidecarFold[S], path: String)
+      : org.apache.spark.sql.streaming.DataStreamWriter[
+        org.apache.spark.sql.Row] = {
+    var st: Option[S] = None
+    stream.writeStream.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
+        try st = Some(fold.fold(spark, path,
+          st.getOrElse(fold.load(spark, path)), batch, Some(batchId)))
+        catch { case e: Throwable => st = None; throw e }
+    }
+  }
+
   /** Sidecar MAINTENANCE from a stream — the ingest side of the
     * [[graft.pipeline.Bloom]] membership family: each micro-batch of
     * keys folds into the persisted filter at `path` (which must
@@ -443,19 +465,8 @@ object StreamOps {
   def bloomUpdateStream(stream: DataFrame, path: String,
       keyCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // fold state carried across batches (the serving-handle discipline
-    // on the maintenance side): the sidecar params + last written rows
-    // ride in memory instead of being re-read per micro-batch; any
-    // failed fold drops the state so the next fold re-reads disk
-    var st: Option[graft.pipeline.Bloom.BloomFoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        try st = Some(graft.pipeline.Bloom.updateFilterCarried(
-          batch.sparkSession, path, batch, keyCol, st))
-        catch { case e: Throwable => st = None; throw e }
-    }
-  }
+        org.apache.spark.sql.Row] =
+    foldStream(stream, graft.pipeline.Bloom.filterFold(keyCol), path)
 
   /** [[bloomUpdateStream]] for the prefix-SHARDED tier
     * ([[graft.pipeline.ShardedBloom]]) — the daily-ingest stream of
@@ -470,18 +481,9 @@ object StreamOps {
   def shardedBloomUpdateStream(stream: DataFrame, path: String,
       keyCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream) — the distributed
-    // tier's frame-backed variant
-    var st: Option[graft.pipeline.ShardedBloom.ShardedBloomFoldState] =
-      None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        try st = Some(graft.pipeline.ShardedBloom.updateFilterCarried(
-          batch.sparkSession, path, batch, keyCol, st))
-        catch { case e: Throwable => st = None; throw e }
-    }
-  }
+        org.apache.spark.sql.Row] =
+    foldStream(stream,
+      graft.pipeline.ShardedBloom.filterFold(keyCol), path)
 
   /** Sidecar maintenance for the [[graft.pipeline.Search]] BM25
     * inverted index — the one persisted retrieval sidecar that
@@ -498,19 +500,9 @@ object StreamOps {
   def bm25UpdateStream(stream: DataFrame, path: String,
       idCol: String, textCol: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream): the df/stats/guard
-    // sidecar frame + sentinels persist across folds; the replay guard
-    // and the atomic swap are inside the fold and unchanged
-    var st: Option[graft.pipeline.Search.Bm25FoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        try st = Some(graft.pipeline.Search.updateIndexCarried(
-          batch.sparkSession, path, batch, idCol, textCol,
-          batchId = Some(batchId), carried = st))
-        catch { case e: Throwable => st = None; throw e }
-    }
-  }
+        org.apache.spark.sql.Row] =
+    foldStream(stream,
+      graft.pipeline.Search.indexFold(idCol, textCol), path)
 
   /** Index maintenance for a persisted [[graft.pipeline.ProductQuant]]
     * IVF-PQ index — the daily-ingest stream of the vector-serving
@@ -580,18 +572,8 @@ object StreamOps {
     */
   def cmsUpdateStream(stream: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream); the additive replay
-    // guard travels inside it and inside every written generation alike
-    var st: Option[graft.pipeline.CountMin.CmsFoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        try st = Some(graft.pipeline.CountMin.updateSketchCarried(
-          batch.sparkSession, path, batch, batchId = Some(batchId),
-          carried = st))
-        catch { case e: Throwable => st = None; throw e }
-    }
-  }
+        org.apache.spark.sql.Row] =
+    foldStream(stream, graft.pipeline.CountMin.sketchFold, path)
 
   /** Per micro-batch drift probe against a persisted reference
     * histogram ([[graft.pipeline.Drift.writeReference]]): each batch's
@@ -659,16 +641,8 @@ object StreamOps {
     */
   def hllUpdateStream(stream: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream)
-    var st: Option[graft.pipeline.Sketches.HllFoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        try st = Some(graft.pipeline.Sketches.updateSketchesCarried(
-          batch.sparkSession, path, batch, st))
-        catch { case e: Throwable => st = None; throw e }
-    }
-  }
+        org.apache.spark.sql.Row] =
+    foldStream(stream, graft.pipeline.Sketches.sketchesFold, path)
 
   /** Sidecar maintenance for the [[graft.pipeline.BottomK]] quantile
     * sample: set-union on `(h, v)` then re-trim to k — IDEMPOTENT
@@ -678,16 +652,8 @@ object StreamOps {
     */
   def bottomKUpdateStream(stream: DataFrame, path: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row] = {
-    // carried fold state (see bloomUpdateStream)
-    var st: Option[graft.pipeline.BottomK.BottomKFoldState] = None
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) =>
-        try st = Some(graft.pipeline.BottomK.updateSketchCarried(
-          batch.sparkSession, path, batch, st))
-        catch { case e: Throwable => st = None; throw e }
-    }
-  }
+        org.apache.spark.sql.Row] =
+    foldStream(stream, graft.pipeline.BottomK.sketchFold, path)
 
   /** Per micro-batch AS-OF join against a STATIC right side (the
     * reference series — quotes, sensor calibrations, exchange rates —
